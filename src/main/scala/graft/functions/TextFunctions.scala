@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Column-level text functions, all built from codegen'd
-  * `org.apache.spark.sql.functions` (no UDFs in the hot path).
+/** Column-level text functions. The tokenizer and word n-grams are
+  * native expressions (one generated static call per row); the rest are
+  * built from `org.apache.spark.sql.functions`. No UDFs.
   *
   * Tokenizer semantics replicate the reference's `clean_words`
   * (/root/reference/client.py:16-21), verified by execution (SURVEY.md §2.1
@@ -14,15 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Exactly Python `string.punctuation` as a regex char class: ASCII
-    * 33-47, 58-64, 91-96, 123-126. Same literal works in Java regex and
-    * RE2 (DuckDB), avoiding locale-dependent `[[:punct:]]`. */
-  val PunctClass: String = "[!-/:-@\\[-`{-~]"
-
-  /** Reference O2 tokenize: `clean_words` semantics (client.py:16-21).
-    * Newlines act as separators (the reference reads line-by-line, so a
-    * `\n` can never be inside a token); punctuation is deleted BEFORE
-    * splitting (`"mid-word"` → `midword`); split on `' +'` only. */
   /** Bind an expression ONCE as a lambda variable (the HOF "let"):
     * `letCol(e)(x => body)` evaluates `e` once per row and every use
     * of `x` in the body is an O(1) variable read. Without it, a
@@ -34,21 +27,26 @@ object TextFunctions {
   def letCol(e: Column)(body: Column => Column): Column =
     element_at(transform(array(e), body), 1)
 
+  /** Reference O2 tokenize: `clean_words` semantics (client.py:16-21).
+    * Newlines act as separators (the reference reads line-by-line, so a
+    * `\n` can never be inside a token); punctuation is deleted BEFORE
+    * splitting (`"mid-word"` → `midword`); split on `' +'` only; a token
+    * is kept if it holds a char outside Java's ASCII whitespace
+    * `[ \t\n\x0B\f\r]`.
+    *
+    * Evaluated by CleanWordsExpression: one pass over the UTF-8 bytes
+    * that deletes punctuation bytes, splits on `0x20`/`0x0A` and drops
+    * tokens made only of `\t \x0B \f \r`. Input that is not valid UTF-8
+    * is first decoded through `java.lang.String`, so each malformed
+    * sequence becomes U+FFFD. */
   def tokenize(text: Column): Column =
-    filter(
-      split(regexp_replace(regexp_replace(text, "\\n", " "), PunctClass, ""), " +"),
-      t => t.rlike("\\S"))
+    Bridge.toColumn(CleanWordsExpression.CleanWords(Bridge.toExpression(text)))
 
   /** Reference O5 case projection (client.py:63-67): fold case unless
     * case-sensitive. Applied pre-shuffle (map side) so shuffle keys are
     * already folded — same result, smaller shuffle (SURVEY.md §7.4.4). */
   def foldCase(word: Column, caseSensitive: Boolean): Column =
     if (caseSensitive) word else lower(word)
-
-  /** Whitespace tokens (simple split, for ngram/TF-IDF style analysis on
-    * already-clean text such as `documents.text`). */
-  def simpleTokens(text: Column): Column =
-    filter(split(text, " +"), t => t.rlike("\\S"))
 
   /** Character n-gram shingles of a string (for MinHash/Jaccard dedup).
     * Built with sequence+transform (codegen'd higher-order funcs); a

@@ -48,6 +48,21 @@ class PlanSpec extends AnyFunSuite {
     assert("\\*\\(\\d+\\) HashAggregate".r.findAllIn(ep).size >= 2)
   }
 
+  test("word count: tokenizer is one native CleanWords, no regex or lambda") {
+    import graft.functions.CleanWordsExpression.CleanWords
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, RLike, RegExpReplace, StringSplit}
+    val lp = WordCount.wordCount(Tables.documents(spark, dir), "text", false)
+      .queryExecution.optimizedPlan
+    val exprs = lp.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[CleanWords]) === 1, lp.treeString)
+    // the composed form's interpreted per-token lambda must not come back
+    val composed = exprs.collect {
+      case e @ (_: ArrayFilter | _: RLike | _: RegExpReplace | _: StringSplit) =>
+        e.prettyName
+    }
+    assert(composed.isEmpty, lp.treeString)
+  }
+
   test("top-k is TakeOrderedAndProject, not a global sort") {
     val p = plan(WordCount.topK(Tables.documents(spark, dir), "text", 20))
     assert(p.contains("TakeOrderedAndProject"))

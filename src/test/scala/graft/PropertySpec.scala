@@ -16,15 +16,21 @@ class PropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** Reference `clean_words`, independently in plain Scala. */
+  /** Reference `clean_words`, independently in plain Scala. A token is
+    * kept if it holds a char outside the documented ASCII whitespace set
+    * `[ \t\n\x0B\f\r]` (Java's `\s`); `Char.isWhitespace` would also
+    * drop U+001C-U+001F and Unicode space separators such as U+3000,
+    * which the product keeps. */
   private val punct = """!"#$%&'()*+,-./:;<=>?@[\]^_`{|}~""".toSet
+  private val blank = " \t\n\u000B\f\r".toSet
   private def tok(text: String): Seq[String] =
     text.replace('\n', ' ').filterNot(punct).split(" +").toSeq
-      .filter(_.exists(c => !c.isWhitespace))
+      .filter(_.exists(c => !blank(c)))
 
   private val wordGen = Gen.oneOf(
     "Hello", "hello", "World", "world", "He's", "mid-word", "42nd",
-    "x\ty", "", " ", "UPPER", "MiXeD")
+    "x\ty", "", " ", "UPPER", "MiXeD", "\u000B", "\f", "\r", "\t\r",
+    "\u00A0", "\u3000", "\u001C", "a\u3000b", "café", "Ünïcödé", "日本語")
   private val lineGen =
     Gen.listOf(wordGen).map(_.mkString(" "))
   private val textGen: Gen[List[String]] = Gen.listOf(lineGen)
